@@ -1,58 +1,89 @@
-"""Query-local persist registry.
+"""Query scope: the owner of everything a query allocates for itself.
 
-Several queries pin (persist) a multiply-consumed intermediate frame so
-its expensive subtree (shingle explodes, Arrow kernels, self-join feeds)
-executes once per materialization instead of once per consumer. Those
-pins are QUERY-LOCAL: unlike the session-memoized index/pair tables
-(``dedup.refresh_pair_tables``, ``catalog.refresh_tables``), nothing
-outside the one returned plan ever reads them, so leaving them persisted
-for the whole session both accumulates cache memory across a 300+-query
-run and lets repeat materializations of the same query read a warm cache
-instead of recomputing.
+A registered query may allocate three kinds of QUERY-LOCAL objects,
+each of which records one release action here:
 
-``pin_local`` persists a frame and records it here; the registry's query
-wrapper calls ``evict_local_pins`` at every TOP-LEVEL query invocation,
-so at most one query's local pins are ever live and a re-invocation of
-the same query recomputes from the parquet inputs (no cross-run result
-caching). Unpersisting a lazy frame that a still-unmaterialized plan
-references is safe — Spark just recomputes the subtree.
+- ``pin_local``: a persisted (MEMORY_AND_DISK) intermediate frame that
+  several consumers of the one returned plan read, so its expensive
+  subtree (shingle explodes, Arrow kernels, self-join feeds) runs once
+  per materialization; released by ``unpersist``;
+- ``temp_dir``: a fresh ``tempfile.mkdtemp`` directory for fixture
+  files, stream checkpoints or a foreachBatch sink's output; released
+  by removing the tree;
+- ``on_release``: any other release action — ``streaming.replay.
+  run_replay`` drops the memory-sink view each stream registers.
+
+The registry's query wrapper calls ``enter_query``/``leave_query``
+around every invocation. A TOP-LEVEL entry (depth 0 -> 1) first runs
+every recorded release action; nested calls (a registered query
+calling another's query function) release nothing. Release waits for the
+NEXT top-level query rather than running when this one returns,
+because the DataFrame a query returns is lazy: it still reads the
+pinned frame, the files in its temp dirs and the memory sink's rows
+when the caller materializes it. So at most one query's local objects
+are ever live, a failed query's leftovers go with the next query, and
+a re-invocation of the same query recomputes from the parquet inputs
+(no cross-run result caching). A query that allocated nothing pays one
+empty-list check.
+
+Session-lifetime objects — the catalog/dedup/index memos and the
+replay-feed dirs memoized in ``streaming.replay`` — are deliberately
+NOT query-local and stay outside this scope.
 """
 
 from __future__ import annotations
 
+import functools
+import logging
+import shutil
+import tempfile
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 
-_LIVE: list[DataFrame] = []
+_LOG = logging.getLogger(__name__)
+_RELEASE: list[Callable[[], object]] = []
 _DEPTH = 0
 
 
 def pin_local(df: DataFrame) -> DataFrame:
-    """Persist ``df`` (MEMORY_AND_DISK) and register it for eviction at
-    the next top-level query invocation."""
+    """Persist ``df`` (MEMORY_AND_DISK) until the next top-level query."""
     from pyspark import StorageLevel
 
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE.append(df)
+    _RELEASE.append(df.unpersist)
     return df
 
 
-def evict_local_pins() -> None:
-    """Unpersist every live query-local pin (the eviction hook)."""
-    while _LIVE:
-        df = _LIVE.pop()
+def temp_dir(prefix: str) -> str:
+    """A fresh temp directory, removed at the next top-level query."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _RELEASE.append(functools.partial(shutil.rmtree, d, ignore_errors=True))
+    return d
+
+
+def on_release(action: Callable[[], object]) -> None:
+    """Run ``action`` at the next top-level query."""
+    _RELEASE.append(action)
+
+
+def release() -> None:
+    """Run (and forget) every recorded release action, newest first.
+    A failed action (say, on a session stopped since) must not stop
+    the others or the query being entered."""
+    while _RELEASE:
         try:
-            df.unpersist()
+            _RELEASE.pop()()
         except Exception:
-            pass
+            _LOG.debug("query-scope release action failed", exc_info=True)
 
 
 def enter_query() -> None:
-    """Called by the registry wrapper on query entry: a TOP-LEVEL entry
-    (depth 0 -> 1) evicts the previous query's local pins; nested calls
-    (a registered query reusing another's builder) leave them alone."""
+    """Query entry: a TOP-LEVEL entry releases the previous query's
+    local objects; nested entries leave them alone."""
     global _DEPTH
     if _DEPTH == 0:
-        evict_local_pins()
+        release()
     _DEPTH += 1
 
 

@@ -22,9 +22,6 @@ LLM-pipeline extension tier (round-9 wave).
 
 from __future__ import annotations
 
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -36,41 +33,31 @@ from history_collector_spark.queries.similarity import (
     ivf_bucketed_index,
 )
 from history_collector_spark.registry import register
-from history_collector_spark.streaming.conf import scoped_state_partitions
-from history_collector_spark.streaming.replay import write_replay_files
+from history_collector_spark.streaming.replay import (
+    range_bucket,
+    replay_feed,
+    run_replay,
+)
 
 _Q_MOD = 103  # disjoint from ann_ivf_bucketed_probe's % 101 set
 _N_FILES = 3
-
-_REPLAY_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _query_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     """The probe-query feed as _N_FILES vec_id-range parquet files with
     increasing mtimes (same replay idiom as the other streaming e2e)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _REPLAY_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    q = (
-        table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % _Q_MOD == 0)
-        .select("vec_id", "label", "embedding")
+
+    def build() -> DataFrame:
+        q = (
+            table(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") % _Q_MOD == 0)
+            .select("vec_id", "label", "embedding")
+        )
+        return range_bucket(q, F.col("vec_id"), _N_FILES)
+
+    return replay_feed(
+        spark, sf_dir, "annq", build, ("vec_id", "label", "embedding"), _N_FILES
     )
-    bounds = q.agg(F.min("vec_id").alias("mn"), F.max("vec_id").alias("mx"))
-    feed = q.crossJoin(F.broadcast(bounds)).withColumn(
-        "file_no",
-        F.floor(
-            F.lit(_N_FILES)
-            * (F.col("vec_id") - F.col("mn"))
-            / (F.col("mx") - F.col("mn") + F.lit(1))
-        ).cast("int"),
-    )
-    flat = write_replay_files(
-        feed, ("vec_id", "label", "embedding"), _N_FILES, prefix="hc_annq_"
-    )
-    _REPLAY_CACHE[key] = flat
-    return flat
 
 
 @register(
@@ -103,49 +90,39 @@ def streaming_ann_probe_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("cemb"),
         F.col("nrm").alias("cnrm"),
     )
-    flat = _query_replay_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(
-            "vec_id bigint, label int, embedding array<float>"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-        .select(
+
+    def score(stream: DataFrame) -> DataFrame:
+        queries = stream.select(
             F.col("vec_id").alias("query_id"),
             "label",
             F.col("embedding").alias("qemb"),
             l2_norm(F.col("embedding")).alias("qnrm"),
         )
-    )
-    scored = stream.join(
-        index,
-        (stream.label == index.ilabel)
-        & (F.col("query_id") != F.col("neighbor_id")),
-    ).select(
-        "query_id",
-        "neighbor_id",
-        cosine(
-            F.col("qemb"), F.col("cemb"), F.col("qnrm"), F.col("cnrm")
-        ).alias("cos_sim"),
-    )
-    name = f"annprobe_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            scored.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        return queries.join(
+            index,
+            (queries.label == index.ilabel)
+            & (F.col("query_id") != F.col("neighbor_id")),
+        ).select(
+            "query_id",
+            "neighbor_id",
+            cosine(
+                F.col("qemb"), F.col("cemb"), F.col("qnrm"), F.col("cnrm")
+            ).alias("cos_sim"),
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+
+    scored = run_replay(
+        spark,
+        _query_replay_dir(spark, sf_dir),
+        score,
+        schema="vec_id bigint, label int, embedding array<float>",
+        name="annprobe",
+        output_mode="append",
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
     return (
-        spark.table(name)
+        scored
         .withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "cos_sim", "rank")

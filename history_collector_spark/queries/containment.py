@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from history_collector_spark.catalog import table
 from history_collector_spark.queries.dedup import NGRAM_DF_CAP, _doc_shingles
 from history_collector_spark.registry import register
 from history_collector_spark.pinning import pin_local

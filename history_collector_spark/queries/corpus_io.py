@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 from history_collector_spark.catalog import spread, table
 from history_collector_spark.functions.nlp import md5_hash32
 from history_collector_spark.registry import register
+from history_collector_spark.streaming.replay import run_replay
 
 _DOC_SCHEMA = T.StructType(
     [
@@ -906,42 +907,18 @@ def streaming_warc_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth. Scale: this is the ingest loop a crawl pipeline runs
     forever — per-batch work is one shard's parse, checkpointing is
     the file-source offset log, and nothing rescans old shards."""
-    import uuid as _uuid
-
-    from history_collector_spark.streaming.conf import (
-        scoped_state_partitions,
+    recs = run_replay(
+        spark,
+        _write_warc_fixture(spark, sf_dir),
+        lambda s: s.select("content").mapInPandas(
+            _warc_batches,
+            schema="source string, doc_id bigint, n_bytes bigint, h32 bigint",
+        ),
+        path_glob="shard*.warc*",
+        name="warcstream",
+        output_mode="append",
     )
-
-    src = _write_warc_fixture(spark, sf_dir)
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "shard*.warc*")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-        .select("content")
-    )
-    recs = stream.mapInPandas(
-        _warc_batches,
-        schema="source string, doc_id bigint, n_bytes bigint, h32 bigint",
-    )
-    name = f"warcstream_{_uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            recs.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).groupBy("source").agg(
+    return recs.groupBy("source").agg(
         F.count("*").alias("n_records"),
         F.sum("n_bytes").alias("payload_bytes"),
         F.sum("h32").alias("digest_sum"),
@@ -2714,42 +2691,18 @@ def streaming_parquet_ingest_e2e(
     compaction/ingest loop — per-batch work is one file's decode,
     checkpointing is the file-source offset log, nothing rescans old
     files."""
-    import uuid as _uuid
-
-    from history_collector_spark.streaming.conf import (
-        scoped_state_partitions,
+    partials = run_replay(
+        spark,
+        _write_parquet_raw_fixture(spark, sf_dir),
+        lambda s: s.select("content").mapInPandas(
+            _parquet_raw_ingest_batches,
+            schema="source string, n_docs bigint, total_chars bigint",
+        ),
+        path_glob="docs*.parquet",
+        name="pqrawstream",
+        output_mode="append",
     )
-
-    src = _write_parquet_raw_fixture(spark, sf_dir)
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "docs*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-        .select("content")
-    )
-    partials = stream.mapInPandas(
-        _parquet_raw_ingest_batches,
-        schema="source string, n_docs bigint, total_chars bigint",
-    )
-    name = f"pqrawstream_{_uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            partials.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).groupBy("source").agg(
+    return partials.groupBy("source").agg(
         F.sum("n_docs").alias("n_docs"),
         F.sum("total_chars").alias("total_chars"),
     )

@@ -25,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from history_collector_spark.catalog import table
 from history_collector_spark.registry import register
 from history_collector_spark.queries.unigram_tok import (
     _dp_spark,

@@ -28,8 +28,6 @@ tier; no frontier surface exists in the reference.
 
 from __future__ import annotations
 
-import os
-import uuid
 from typing import Iterator
 
 import pandas as pd
@@ -47,16 +45,15 @@ from pyspark.sql.types import (
 
 from history_collector_spark.catalog import table
 from history_collector_spark.registry import register
-from history_collector_spark.streaming.replay import write_replay_files
-from history_collector_spark.streaming.conf import (
-    python_state_partitions,
-    scoped_state_partitions,
+from history_collector_spark.streaming.conf import python_state_partitions
+from history_collector_spark.streaming.replay import (
+    range_bucket,
+    replay_feed,
+    run_replay,
 )
 
 _N_FILES = 3
 _BUDGET = 25  # per-host admissions per crawl cycle (spans batches)
-
-_REPLAY_CACHE: dict[tuple[str, str], str] = {}
 
 _OUT_SCHEMA = StructType(
     [
@@ -73,27 +70,12 @@ def _frontier_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     """Discovery feed: _N_FILES doc_id-range parquet files with
     increasing mtimes (the replay idiom shared by every streaming
     e2e here)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _REPLAY_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    bounds = docs.agg(
-        F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")
-    )
-    feed = docs.crossJoin(F.broadcast(bounds)).withColumn(
-        "file_no",
-        F.floor(
-            F.lit(_N_FILES)
-            * (F.col("doc_id") - F.col("mn"))
-            / (F.col("mx") - F.col("mn") + F.lit(1))
-        ).cast("int"),
-    )
-    flat = write_replay_files(
-        feed, ("doc_id",), _N_FILES, prefix="hc_frontier_"
-    )
-    _REPLAY_CACHE[key] = flat
-    return flat
+
+    def build() -> DataFrame:
+        docs = table(spark, sf_dir, "documents").select("doc_id")
+        return range_bucket(docs, F.col("doc_id"), _N_FILES)
+
+    return replay_feed(spark, sf_dir, "frontier", build, ("doc_id",), _N_FILES)
 
 
 def _admit(
@@ -151,41 +133,33 @@ def streaming_frontier_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     admission loses and invents nothing. The politeness makespan is
     reconstructed from admitted slots and the host-constant delay —
     exact integers end to end."""
-    flat = _frontier_replay_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("doc_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-        .select(
+
+    def admit(stream: DataFrame) -> DataFrame:
+        hosts = stream.select(
             "doc_id",
             F.concat(
                 F.lit("crawl"), (F.col("doc_id") % 17).cast("string")
             ).alias("host"),
         )
-    )
-    admitted = stream.groupBy("host").applyInPandasWithState(
-        _admit,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    name = f"frontier_{uuid.uuid4().hex[:8]}"
+        return hosts.groupBy("host").applyInPandasWithState(
+            _admit,
+            outputStructType=_OUT_SCHEMA,
+            stateStructType=_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+
     # key_bound: politeness state is keyed by host; the discovery feed
     # constructs hosts as doc_id % 17
-    with scoped_state_partitions(spark, python_state_partitions(spark, key_bound=17)):
-        q = (
-            admitted.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    rows = spark.table(name)
+    rows = run_replay(
+        spark,
+        _frontier_replay_dir(spark, sf_dir),
+        admit,
+        schema="doc_id bigint",
+        name="frontier",
+        partitions=python_state_partitions(spark, key_bound=17),
+        output_mode="append",
+    )
     delay = 1 + (F.col("doc_id") % 17) % 3
     adm = F.col("admitted") == 1
     return rows.groupBy("host").agg(

@@ -47,9 +47,7 @@ this extends its exactly-once ingest loop (reference python/main.py:
 from __future__ import annotations
 
 import hashlib
-import os
 import re
-import uuid
 from typing import Iterator
 
 import numpy as np
@@ -70,8 +68,11 @@ from pyspark.sql.types import (
 from history_collector_spark.catalog import table
 from history_collector_spark.functions.nlp import MH_PRIME, mh_consts
 from history_collector_spark.registry import register
-from history_collector_spark.streaming.replay import write_replay_files
-from history_collector_spark.streaming.conf import scoped_state_partitions
+from history_collector_spark.streaming.replay import (
+    range_bucket,
+    replay_feed,
+    run_replay,
+)
 
 N_HASHES = 32
 N_BANDS = 16
@@ -270,58 +271,20 @@ def track_bucket_pairs(
     )
 
 
-_DOC_REPLAY_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _doc_replay_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Odd-doc_id documents as _N_FILES doc_id-range-partitioned parquet
-    files with strictly increasing mtimes (the file source orders
-    micro-batches by modification time), memoized per (session, corpus)
-    like xstream._time_partitioned_replay_dir."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DOC_REPLAY_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    docs = (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 2 == 1)
-        .select("doc_id", "text")
-    )
-    bounds = docs.agg(
-        F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")
-    )
-    feed = docs.crossJoin(F.broadcast(bounds)).withColumn(
-        "file_no",
-        F.floor(
-            F.lit(_N_FILES)
-            * (F.col("doc_id") - F.col("mn"))
-            / (F.col("mx") - F.col("mn") + F.lit(1))
-        ).cast("int"),
-    )
-    flat = write_replay_files(
-        feed, ("doc_id", "text"), _N_FILES, prefix="hc_neardup_"
-    )
-    _DOC_REPLAY_CACHE[key] = flat
-    return flat
+    """Odd-doc_id documents as _N_FILES doc_id-range replay files."""
 
-
-def _run_to_table(
-    spark: SparkSession, out: DataFrame, prefix: str, n_state: int = 8
-) -> DataFrame:
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark, n_state):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    def build() -> DataFrame:
+        docs = (
+            table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % 2 == 1)
+            .select("doc_id", "text")
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+        return range_bucket(docs, F.col("doc_id"), _N_FILES)
+
+    return replay_feed(
+        spark, sf_dir, "neardup", build, ("doc_id", "text"), _N_FILES
+    )
 
 
 # Batch LSH CTE over a PARAMETRIZED doc set (dedup._BUCKETS_SQL is
@@ -397,34 +360,29 @@ def streaming_neardup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 2 == 0
     )
 
-    flat = _doc_replay_dir(spark, sf_dir)
-
-    def sig_stream():
-        return signature_stream(
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(flat)
-        )
-
-    # channel 1: probe the static corpus index on (band, bucket)
-    sigs = sig_stream()
     idx = index.select(
         F.col("doc_id").alias("idx_doc"),
         F.col("band").alias("iband"),
         F.col("bucket").alias("ibucket"),
     )
-    probe = sigs.join(
-        idx,
-        (sigs.band == idx.iband) & (sigs.bucket == idx.ibucket),
-    ).select(
-        F.least("doc_id", "idx_doc").alias("doc_a"),
-        F.greatest("doc_id", "idx_doc").alias("doc_b"),
-    )
-    # channel 2: in-stream collisions via keyed bucket state. Both
-    # channels UNION into one streaming query, so the feed replays
-    # once (_N_FILES micro-batches, not 2x) — the stateful subtree and the
-    # stream-static join coexist under a single availableNow run.
-    both = probe.unionByName(track_bucket_pairs(sig_stream()))
+
+    def both_channels(docs: DataFrame) -> DataFrame:
+        # channel 1: probe the static corpus index on (band, bucket)
+        sigs = signature_stream(docs)
+        probe = sigs.join(
+            idx,
+            (sigs.band == idx.iband) & (sigs.bucket == idx.ibucket),
+        ).select(
+            F.least("doc_id", "idx_doc").alias("doc_a"),
+            F.greatest("doc_id", "idx_doc").alias("doc_b"),
+        )
+        # channel 2: in-stream collisions via keyed bucket state. Both
+        # channels UNION into one streaming query over ONE source, so
+        # the feed replays once (_N_FILES micro-batches, not 2x) — the
+        # stateful subtree and the stream-static join coexist under a
+        # single availableNow run.
+        return probe.unionByName(track_bucket_pairs(signature_stream(docs)))
+
     # state partitions = defaultParallelism: the keyed bucket tracker
     # is a PYTHON stateful op (applyInPandasWithState), so each state
     # partition is an Arrow round-trip through a worker — measured at
@@ -432,8 +390,13 @@ def streaming_neardup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # More state tasks = more concurrent Python workers; the
     # state-store init cost the JVM-side streams tune DOWN for is not
     # the binding constraint here.
-    merged = _run_to_table(
-        spark, both, "ndpairs",
-        n_state=spark.sparkContext.defaultParallelism,
+    merged = run_replay(
+        spark,
+        _doc_replay_dir(spark, sf_dir),
+        both_channels,
+        schema="doc_id bigint, text string",
+        name="ndpairs",
+        partitions=spark.sparkContext.defaultParallelism,
+        output_mode="append",
     )
     return merged.distinct()

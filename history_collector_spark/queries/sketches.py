@@ -22,7 +22,7 @@ tests/test_properties.py against exact answers).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from history_collector_spark.catalog import table

@@ -26,20 +26,19 @@ streams track in parallel.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from history_collector_spark.catalog import table
+from history_collector_spark.pinning import temp_dir
 from history_collector_spark.registry import register
-from history_collector_spark.streaming.conf import (
-    python_state_partitions,
-    scoped_state_partitions,
+from history_collector_spark.streaming.conf import python_state_partitions
+from history_collector_spark.streaming.replay import (
+    range_bucket,
+    replay_feed,
+    run_replay,
+    write_replay_files,
 )
-from history_collector_spark.streaming.replay import write_replay_files
 from history_collector_spark.streaming.stateful import (
     MG_CAPACITY,
     track_ewma,
@@ -53,6 +52,8 @@ from history_collector_spark.streaming.stateful import (
 _N_PER_STREAM = 24  # sequences per stream: 0, 64, ..., 23*64
 _STEP = 64
 _DUP_EVERY = 5  # every 5th sequence is fed twice
+_EVENTS_SCHEMA = "event_id long, ts timestamp, user_id long, value double"
+_LATE_SCHEMA = "event_id long, ts timestamp, event_type string"
 
 
 @register(
@@ -105,84 +106,32 @@ def streaming_gapless_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             % 6
         ),
     )
-    # one parquet file per file_no -> maxFilesPerTrigger=1 gives 6
+    # one parquet file per file_no -> one file per micro-batch gives 6
     # genuine micro-batches with state carried between them
     flat = write_replay_files(
-        feed, ("stream_id", "seq"), 6, prefix="hc_gapless_"
+        feed, ("stream_id", "seq"), 6, temp_dir("hc_gapless_")
     )
-
-    stream = (
-        spark.readStream.schema("stream_id string, seq long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    released = track_gapless(stream, start_seq=0, step=_STEP)
-    name = f"gapless_{uuid.uuid4().hex[:8]}"
     # key_bound=2: the feed constructs exactly two stream_ids (r16 —
     # 32 state partitions cost 2-7 s of Python round-trips PER BATCH)
-    with scoped_state_partitions(spark, python_state_partitions(spark, key_bound=2)):
-        q = (
-            released.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-            shutil.rmtree(flat, ignore_errors=True)
-    return spark.table(name).select("stream_id", "seq", "status")
+    return run_replay(
+        spark, flat, lambda s: track_gapless(s, start_seq=0, step=_STEP),
+        schema="stream_id string, seq long", name="gapless",
+        partitions=python_state_partitions(spark, key_bound=2),
+        output_mode="append",
+    ).select("stream_id", "seq", "status")
 
 
-# Replay feed memo: the EWMA and z-score e2e queries consume the IDENTICAL
-# 6-file feed, so it is built once per (session, sf_dir, n_files) and
-# shared — exactly like dedup.candidate_pair_table. Keyed by applicationId
-# so a fresh session (new JVM temp state) rebuilds. Dirs are left for the
-# OS tempdir reaper rather than rmtree'd after the first consumer.
-_REPLAY_DIR_CACHE: dict[tuple[str, str, int], str] = {}
+def _events_replay(spark: SparkSession, sf_dir: str) -> str:
+    """events as _EWMA_FILES TIME-RANGE-bucketed replay files, so the
+    replay runs as in-event-time-order micro-batches. One session memo
+    shared by the six consumers below, which pay the fixture I/O once."""
+    cols = ("event_id", "ts", "user_id", "value")
 
+    def build() -> DataFrame:
+        ev = table(spark, sf_dir, "events").select(*cols)
+        return range_bucket(ev, F.unix_micros("ts"), _EWMA_FILES)
 
-def _time_partitioned_replay_dir(
-    spark: SparkSession, sf_dir: str, n_files: int
-) -> str:
-    """Write events as n_files TIME-RANGE-partitioned parquet files
-    with strictly increasing mtimes, so maxFilesPerTrigger=1 replays
-    them as in-event-time-order micro-batches. The range bucketing is
-    a map-only 1-row bounds broadcast (fixture construction never
-    sorts globally); mtimes are pinned because the file source orders
-    batches by MODIFICATION time and same-second copies would scramble
-    the replay. Memoized per (session, corpus, n_files) so the two
-    stateful e2e consumers pay the fixture I/O once."""
-    import os
-
-    key = (spark.sparkContext.applicationId, sf_dir, n_files)
-    cached = _REPLAY_DIR_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "value"
-    )
-    us = F.unix_micros("ts")
-    bounds = ev.agg(F.min(us).alias("mn"), F.max(us).alias("mx"))
-    feed = ev.crossJoin(F.broadcast(bounds)).withColumn(
-        "file_no",
-        F.floor(
-            F.lit(n_files)
-            * (us - F.col("mn"))
-            / (F.col("mx") - F.col("mn") + F.lit(1))
-        ).cast("int"),
-    )
-    flat = write_replay_files(
-        feed,
-        ("event_id", "ts", "user_id", "value"),
-        n_files,
-        prefix="hc_replay_",
-    )
-    _REPLAY_DIR_CACHE[key] = flat
-    return flat
+    return replay_feed(spark, sf_dir, "replay", build, cols, _EWMA_FILES)
 
 
 # ---------------------------------------------------------------------------
@@ -216,18 +165,7 @@ def streaming_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     huge but per-batch activity is sparse."""
     import os
 
-    flat = _time_partitioned_replay_dir(spark, sf_dir, _EWMA_FILES)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    agg = stream.groupBy("user_id").agg(
-        F.count("*").alias("n_events"), F.sum("value").alias("total_value")
-    )
-    out_dir = tempfile.mkdtemp(prefix="hc_upsert_")
+    out_dir = temp_dir("hc_upsert_")
 
     def upsert_batch(batch_df, epoch_id: int) -> None:
         # the delta: only keys changed in this epoch arrive here
@@ -237,21 +175,17 @@ def streaming_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(out_dir, f"epoch={epoch_id}"))
         )
 
-    with scoped_state_partitions(spark):
-        q = (
-            agg.writeStream.foreachBatch(upsert_batch)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="hc_upsert_ck_"),
-            )
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    run_replay(
+        spark,
+        _events_replay(spark, sf_dir),
+        lambda s: s.groupBy("user_id").agg(
+            F.count("*").alias("n_events"), F.sum("value").alias("total_value")
+        ),
+        schema=_EVENTS_SCHEMA,
+        name="upsert",
+        output_mode="update",
+        foreach_batch=upsert_batch,
+    )
     deltas = spark.read.option("basePath", out_dir).parquet(
         os.path.join(out_dir, "epoch=*")
     )
@@ -269,7 +203,6 @@ def streaming_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and genuinely late rows are DROPPED, deterministically.
 # ---------------------------------------------------------------------------
 
-_LATE_REPLAY_CACHE: dict[tuple[str, str], str] = {}
 _LATE_FILES = 6
 _LATE_DELAY_MIN = 90  # watermark delay
 
@@ -281,40 +214,33 @@ def _late_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     unambiguously beyond any sane watermark. Bucketing is integer
     `div` arithmetic so the DuckDB oracle reproduces the displacement
     exactly."""
-    import os
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LATE_REPLAY_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    ev = table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    us = F.unix_micros("ts")
-    bounds = ev.agg(F.min(us).alias("mn"), F.max(us).alias("mx"))
-    feed = (
-        ev.crossJoin(F.broadcast(bounds))
-        .withColumn(
-            "orig",
-            F.expr(
-                f"({_LATE_FILES} * (unix_micros(ts) - mn)) div (mx - mn + 1)"
-            ),
+    def build() -> DataFrame:
+        ev = table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
+        us = F.unix_micros("ts")
+        bounds = ev.agg(F.min(us).alias("mn"), F.max(us).alias("mx"))
+        return (
+            ev.crossJoin(F.broadcast(bounds))
+            .withColumn(
+                "orig",
+                F.expr(
+                    f"({_LATE_FILES} * (unix_micros(ts) - mn)) div (mx - mn + 1)"
+                ),
+            )
+            .withColumn(
+                "arrival",
+                F.when(
+                    (F.col("event_id") % 13 == 0) & (F.col("orig") <= 1),
+                    F.col("orig") + 4,
+                ).otherwise(F.col("orig")),
+            )
         )
-        .withColumn(
-            "arrival",
-            F.when(
-                (F.col("event_id") % 13 == 0) & (F.col("orig") <= 1),
-                F.col("orig") + 4,
-            ).otherwise(F.col("orig")),
-        )
+
+    # displaced arrivals stay within 0.._LATE_FILES-1
+    return replay_feed(
+        spark, sf_dir, "late", build, ("event_id", "ts", "event_type"),
+        _LATE_FILES, bucket_col="arrival",
     )
-    flat = write_replay_files(
-        feed,
-        ("event_id", "ts", "event_type"),
-        _LATE_FILES,  # displaced arrivals stay within 0.._LATE_FILES-1
-        bucket_col="arrival",
-        prefix="hc_late_",
-    )
-    _LATE_REPLAY_CACHE[key] = flat
-    return flat
 
 
 @register(
@@ -358,31 +284,19 @@ def streaming_late_drop_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: state per (window, type) is one count; drops happen
     at the input filter, before any state lookup."""
-    flat = _late_replay_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
+    out = run_replay(
+        spark,
+        _late_replay_dir(spark, sf_dir),
+        lambda s: (
+            s.withWatermark("ts", f"{_LATE_DELAY_MIN} minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .count()
+        ),
+        schema=_LATE_SCHEMA,
+        name="late",
+        output_mode="append",
     )
-    agg = (
-        stream.withWatermark("ts", f"{_LATE_DELAY_MIN} minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .count()
-    )
-    name = f"late_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).select(
+    return out.select(
         F.col("w.start").alias("window_start"),
         "event_type",
         F.col("count").alias("n"),
@@ -478,32 +392,21 @@ def streaming_topk_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming twin of the batch Misra-Gries in heavy_hitter_tokens,
     with the summary surviving restarts via the state store. A million
     keys cost megabytes; the per-arrival update is O(1) amortized."""
-    flat = _late_replay_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
     # user dimension: derive a stable pseudo-user from the event id so
-    # the fixture stays 3 columns (the tracker only needs an id stream)
-    stream = stream.withColumn("user_id", F.col("event_id") % 50)
-    out = track_heavy_hitters(stream)
-    name = f"topk_{uuid.uuid4().hex[:8]}"
+    # the fixture stays 3 columns (the tracker only needs an id stream);
     # key_bound: the tracker is keyed by event_type — a small, fixed
     # domain (5 types in the fixture; event taxonomies are O(10))
-    with scoped_state_partitions(spark, python_state_partitions(spark, key_bound=5)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    snaps = spark.table(name)
+    snaps = run_replay(
+        spark,
+        _late_replay_dir(spark, sf_dir),
+        lambda s: track_heavy_hitters(
+            s.withColumn("user_id", F.col("event_id") % 50)
+        ),
+        schema=_LATE_SCHEMA,
+        name="topk",
+        partitions=python_state_partitions(spark, key_bound=5),
+        output_mode="append",
+    )
     w = Window.partitionBy("event_type")
     return (
         snaps.withColumn("max_seen", F.max("n_seen").over(w))
@@ -555,28 +458,14 @@ def streaming_ewma_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     double per key (bounded at any scale); the feed partitioner is a
     map-only epoch-range bucketing (1-row bounds broadcast), so fixture
     construction never sorts globally."""
-    flat = _time_partitioned_replay_dir(spark, sf_dir, _EWMA_FILES)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    out = track_ewma(stream, _EWMA_ALPHA)
-    name = f"sewma_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark, python_state_partitions(spark)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).select("event_id", "user_id", "ewma")
+    return run_replay(
+        spark,
+        _events_replay(spark, sf_dir),
+        lambda s: track_ewma(s, _EWMA_ALPHA),
+        schema=_EVENTS_SCHEMA,
+        name="sewma",
+        partitions=python_state_partitions(spark),
+    ).select("event_id", "user_id", "ewma")
 
 
 # ---------------------------------------------------------------------------
@@ -610,28 +499,14 @@ def streaming_zscore_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation; the stream must reproduce it with three Welford
     numbers per key surviving the state store across six time-range
     micro-batches."""
-    flat = _time_partitioned_replay_dir(spark, sf_dir, _EWMA_FILES)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    out = track_zscore(stream)
-    name = f"szs_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark, python_state_partitions(spark)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).select("event_id", "user_id", "z")
+    return run_replay(
+        spark,
+        _events_replay(spark, sf_dir),
+        track_zscore,
+        schema=_EVENTS_SCHEMA,
+        name="szs",
+        partitions=python_state_partitions(spark),
+    ).select("event_id", "user_id", "z")
 
 
 # ---------------------------------------------------------------------------
@@ -674,15 +549,7 @@ def streaming_scd2_cdc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    flat = _time_partitioned_replay_dir(spark, sf_dir, _EWMA_FILES)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    out_dir = tempfile.mkdtemp(prefix="hc_scd2_")
+    out_dir = temp_dir("hc_scd2_")
 
     def current_changes(batch_spark, users_df):
         """Recover the touched keys' accumulated CHANGE LIST from the
@@ -720,21 +587,14 @@ def streaming_scd2_cdc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(out_dir, f"epoch={epoch_id}")
         )
 
-    with scoped_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(apply_cdc)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="hc_scd2_ck_")
-            )
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-
+    run_replay(
+        spark,
+        _events_replay(spark, sf_dir),
+        schema=_EVENTS_SCHEMA,
+        name="scd2",
+        output_mode="append",
+        foreach_batch=apply_cdc,
+    )
     snaps = spark.read.option("basePath", out_dir).parquet(
         os.path.join(out_dir, "epoch=*")
     )
@@ -789,28 +649,14 @@ def streaming_page_hinkley_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     any scale; keys partition the stream so a million independent
     monitors run in parallel (the same contract as the EWMA/z-score
     trackers)."""
-    flat = _time_partitioned_replay_dir(spark, sf_dir, _EWMA_FILES)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    out = track_page_hinkley(stream, _PH_DELTA, _PH_LAMBDA)
-    name = f"sph_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark, python_state_partitions(spark)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).select("event_id", "user_id", "ph", "drift")
+    return run_replay(
+        spark,
+        _events_replay(spark, sf_dir),
+        lambda s: track_page_hinkley(s, _PH_DELTA, _PH_LAMBDA),
+        schema=_EVENTS_SCHEMA,
+        name="sph",
+        partitions=python_state_partitions(spark),
+    ).select("event_id", "user_id", "ph", "drift")
 
 
 # ---------------------------------------------------------------------------
@@ -875,14 +721,6 @@ def streaming_hll_merge_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     half of sketch_hll_estimate (same register layout), i.e. the
     incremental form a 100 TB nightly distinct-count rollup runs.
     """
-    flat = _time_partitioned_replay_dir(spark, sf_dir, _EWMA_FILES)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
     h = (
         F.conv(
             F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
@@ -890,30 +728,27 @@ def streaming_hll_merge_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
     )
     v = F.floor(F.col("hv") / _SHLL_M).cast("long")
-    enriched = stream.select(
-        (F.col("user_id") % _SHLL_SHARDS).alias("shard"), h.alias("hv")
-    ).select(
-        "shard",
-        (F.col("hv") % _SHLL_M).alias("bucket"),
-        F.when(v == 0, F.lit(_SHLL_VBITS + 1))
-        .otherwise(F.lit(_SHLL_VBITS) - F.length(F.bin(v)) + 1)
-        .alias("rho"),
-    )
-    out = track_hll(enriched, m=_SHLL_M)
-    name = f"shll_{uuid.uuid4().hex[:8]}"
-    # key_bound: state is keyed by shard = user_id % _SHLL_SHARDS
-    with scoped_state_partitions(spark, python_state_partitions(spark, key_bound=_SHLL_SHARDS)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+
+    def enrich(stream: DataFrame) -> DataFrame:
+        return stream.select(
+            (F.col("user_id") % _SHLL_SHARDS).alias("shard"), h.alias("hv")
+        ).select(
+            "shard",
+            (F.col("hv") % _SHLL_M).alias("bucket"),
+            F.when(v == 0, F.lit(_SHLL_VBITS + 1))
+            .otherwise(F.lit(_SHLL_VBITS) - F.length(F.bin(v)) + 1)
+            .alias("rho"),
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    t = spark.table(name)
+
+    # key_bound: state is keyed by shard = user_id % _SHLL_SHARDS
+    t = run_replay(
+        spark,
+        _events_replay(spark, sf_dir),
+        lambda s: track_hll(enrich(s), m=_SHLL_M),
+        schema=_EVENTS_SCHEMA,
+        name="shll",
+        partitions=python_state_partitions(spark, key_bound=_SHLL_SHARDS),
+    )
     last = (
         t.groupBy("shard")
         .agg(F.max("upd").alias("u"))

@@ -2,12 +2,7 @@
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-from typing import Iterator
-
 from pyspark.sql import SparkSession
-
-from history_collector_spark.functions.scope import scoped_shuffle_partitions
 
 # State-store parallelism for the driver-gated e2e streams. A stateful
 # streaming query fixes its number of state partitions at FIRST start
@@ -22,17 +17,6 @@ from history_collector_spark.functions.scope import scoped_shuffle_partitions
 # this knob scopes the choice per query instead of inheriting whatever
 # batch-oriented session default is active.
 STREAM_STATE_PARTITIONS = 8
-
-
-@contextmanager
-def scoped_state_partitions(
-    spark: SparkSession, n: int = STREAM_STATE_PARTITIONS
-) -> Iterator[None]:
-    """Temporarily set spark.sql.shuffle.partitions around a streaming
-    query's start+drain so its state stores are sized for the stream,
-    then restore the session's batch setting."""
-    with scoped_shuffle_partitions(spark, n):
-        yield
 
 
 def python_state_partitions(spark: SparkSession, key_bound: int | None = None) -> int:

@@ -19,11 +19,9 @@ concern.
 
 from __future__ import annotations
 
-import json
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     BinaryType,
