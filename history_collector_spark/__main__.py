@@ -11,8 +11,9 @@ doorway for the Spark engine:
     explain NAME [--sf-dir D] print the formatted physical plan
     parity NAME [--sf-dir D]  run query + oracle, assert driver-hash
                               parity (round-6-then-exact; PARITY.md)
-    ingest --landing D --out D --checkpoint D [--poll]
-                              run the exactly-once file-stream ingest
+    ingest --landing D --out D --checkpoint D --kin-issuer HEX [--poll]
+                              run the exactly-once file-stream ingest of
+                              KIN payments and account creations
 
 Everything routes through the same registry / session factory the
 driver contract uses — the CLI adds no second code path.
@@ -21,6 +22,7 @@ driver contract uses — the CLI adds no second code path.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 
@@ -52,6 +54,12 @@ def _build_parser() -> argparse.ArgumentParser:
     i.add_argument("--landing", required=True)
     i.add_argument("--checkpoint", required=True)
     i.add_argument("--out", required=True)
+    i.add_argument(
+        "--kin-issuer",
+        required=True,
+        type=lambda s: bytes.fromhex(s).hex(),
+        help="hex ed25519 key of the KIN asset issuer (the reference's KIN_ISSUER)",
+    )
     i.add_argument(
         "--poll",
         action="store_true",
@@ -132,9 +140,13 @@ def main(argv: list[str] | None = None) -> int:
         from history_collector_spark.sinks.exactly_once import (
             ExactlyOnceDualSink,
         )
-        from history_collector_spark.streaming.ingest import start_ingest
+        from history_collector_spark.streaming.ingest import (
+            kin_operations,
+            start_ingest,
+        )
 
         spark = get_spark(app_name="hcs-cli-ingest")
+        os.makedirs(args.out, exist_ok=True)
         sink = ExactlyOnceDualSink(args.out)
         q = start_ingest(
             spark,
@@ -142,6 +154,7 @@ def main(argv: list[str] | None = None) -> int:
             checkpoint_dir=args.checkpoint,
             batch_fn=sink.write_batch,
             available_now=not args.poll,
+            transform=kin_operations(args.kin_issuer),
         )
         q.awaitTermination()
         return 0

@@ -413,18 +413,15 @@ def _write_dpo_fixture(spark: SparkSession, sf_dir: str) -> str:
     docs = table(spark, sf_dir, "documents")
     docs.write.mode("overwrite").partitionBy("lang").parquet(tbl)
     # the backfill: rewrite ONLY lang=de with the even-doc_id subset,
-    # under dynamic mode so sibling partitions survive the overwrite
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            docs.filter((F.col("lang") == "de") & (F.col("doc_id") % 2 == 0))
-            .write.mode("overwrite")
-            .partitionBy("lang")
-            .parquet(tbl)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+    # under dynamic mode (a write option, so the session conf is never
+    # touched) so sibling partitions survive the overwrite
+    (
+        docs.filter((F.col("lang") == "de") & (F.col("doc_id") % 2 == 0))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("lang")
+        .parquet(tbl)
+    )
     with open(done, "w") as f:
         f.write("ok")
     return tbl

@@ -16,6 +16,14 @@ Ordering guarantees: data first, marker last, so a crash between the
 two leaves a re-runnable epoch, never a committed-but-missing one
 (readers trust the marker, mirroring the reference's completion-marker
 design).
+
+One evaluation per epoch: ``write_epoch`` persists the epoch_id-stamped
+batch for the epoch's own lifetime, so both tables' emptiness checks
+and writes read the cache instead of re-running the file scan and the
+XDR decode once each; it is unpersisted before the marker commits, also
+when a write raises. The dynamic overwrite mode is a per-write option
+(it takes precedence over the session conf), so the sink leaves the
+session's ``partitionOverwriteMode`` as it found it.
 """
 
 from __future__ import annotations
@@ -23,10 +31,35 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from history_collector_spark.schemas import enforce_nullability, payments_schema
+
+
+def write_epoch(
+    batch_df: DataFrame,
+    epoch_id: int,
+    targets: dict[str, str],
+    write: Callable[[DataFrame, str], None],
+) -> None:
+    """Split one epoch's `type`-tagged rows into their tables, evaluating
+    the batch once: ``write(rows, targets[kind])`` per non-empty kind.
+
+    The epoch_id-stamped batch stays persisted only while this call
+    runs; empty kinds write nothing, since empty batches still advance
+    the checkpoint but write no files
+    (python/tests/test_postgres_storage_adapter.py:230-251)."""
+    tagged = batch_df.withColumn("epoch_id", F.lit(epoch_id)).persist()
+    try:
+        for kind, target in targets.items():
+            rows = tagged.filter(F.col("type") == kind).drop("type")
+            if not rows.isEmpty():
+                write(rows, target)
+    finally:
+        tagged.unpersist()
 
 
 class ExactlyOnceDualSink:
@@ -66,30 +99,22 @@ class ExactlyOnceDualSink:
         committed = self.last_committed()
         if committed is not None and epoch_id <= committed:
             return  # already fully committed — replay is a no-op
-
-        from pyspark.sql import functions as F
-
-        tagged = batch_df.withColumn("epoch_id", F.lit(epoch_id))
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-        for kind, out_dir in (
-            ("payment", self.payments_dir),
-            ("creation", self.creations_dir),
-        ):
-            rows = tagged.filter(F.col("type") == kind).drop("type")
-            # empty batches still advance the checkpoint but write no
-            # files (python/tests/test_postgres_storage_adapter.py:230-251)
-            if rows.isEmpty():
-                continue
-            (
-                rows.write.mode("overwrite")
-                .partitionBy("epoch_id")
-                .format(self.fmt)
-                .save(out_dir)
-            )
-
+        write_epoch(
+            batch_df,
+            epoch_id,
+            {"payment": self.payments_dir, "creation": self.creations_dir},
+            self._write_rows,
+        )
         self._commit(epoch_id)
+
+    def _write_rows(self, rows: DataFrame, out_dir: str) -> None:
+        (
+            rows.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("epoch_id")
+            .format(self.fmt)
+            .save(out_dir)
+        )
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         self.write_batch(batch_df, epoch_id)

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from history_collector_spark.sinks.exactly_once import write_epoch
+
 
 def committed_view(rows: DataFrame, committed_epoch: int | None) -> DataFrame:
     """Reader-side visibility: only rows from fully-committed epochs.
@@ -40,8 +42,9 @@ def committed_view(rows: DataFrame, committed_epoch: int | None) -> DataFrame:
 class JdbcDualSink:
     """foreachBatch body writing payments/creations/lastfile over JDBC.
 
-    mirrors ExactlyOnceDualSink: skip replayed epochs, stamp epoch_id,
-    data before checkpoint."""
+    mirrors ExactlyOnceDualSink: skip replayed epochs, stamp epoch_id
+    and evaluate the batch once (``write_epoch``), data before
+    checkpoint."""
 
     def __init__(
         self,
@@ -112,17 +115,14 @@ class JdbcDualSink:
         for tbl in (self.payments_table, self.creations_table):
             self._delete_epoch_rows(spark, tbl, epoch_id)
 
-        tagged = batch_df.withColumn("epoch_id", F.lit(epoch_id))
-        for kind, tbl in (
-            ("payment", self.payments_table),
-            ("creation", self.creations_table),
-        ):
-            rows = tagged.filter(F.col("type") == kind).drop("type")
-            if rows.isEmpty():
-                continue  # empty batches still advance the checkpoint
-            rows.write.jdbc(
+        write_epoch(
+            batch_df,
+            epoch_id,
+            {"payment": self.payments_table, "creation": self.creations_table},
+            lambda rows, tbl: rows.write.jdbc(
                 self.url, tbl, mode="append", properties=self.properties
-            )
+            ),
+        )
 
         # checkpoint LAST: a crash above leaves invisible rows, never a
         # committed-but-missing epoch (batchsize etc. ride properties)

@@ -22,6 +22,7 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     BinaryType,
@@ -32,7 +33,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from history_collector_spark.sources.xdr import ENTRY_SCHEMA, _parse_payload
+from history_collector_spark.sources.xdr import ENTRY_SCHEMA, _decode_batches
 
 
 def read_archive_stream(
@@ -58,27 +59,55 @@ def read_archive_stream(
         .select("path", "content")
     )
 
-    def decode(batches):
-        import pandas as pd
+    return files.mapInPandas(_decode_batches, schema=ENTRY_SCHEMA)
 
-        from history_collector_spark.sources.xdr import _FILE_SEQ_RE
 
-        for pdf in batches:
-            rows = []
-            for path, raw in zip(pdf["path"], pdf["content"]):
-                m = _FILE_SEQ_RE.search(str(path))
-                rows.extend(
-                    _parse_payload(
-                        bytes(raw), file_seq=m.group(1) if m else None
-                    )
-                )
-            yield (
-                pd.DataFrame(rows, columns=["file_seq", "ledger_seq", "txs"])
-                if rows
-                else pd.DataFrame({"file_seq": [], "ledger_seq": [], "txs": []})
-            )
+def kin_operations(kin_issuer_hex: str) -> Callable[[DataFrame], DataFrame]:
+    """The ingest transform: decoded entries -> one `type`-tagged row per
+    KIN payment from the KIN issuer and per account creation, the rows
+    the dual sinks split on `type`.
 
-    return files.mapInPandas(decode, schema=ENTRY_SCHEMA)
+    Explodes transactions, then operations with their index, and keeps
+    the reference's filter (python/main.py:160-164,184): payments whose
+    asset is KIN issued by `kin_issuer_hex`, every creation.
+    An operation's own source account wins over the transaction's."""
+
+    def transform(entries: DataFrame) -> DataFrame:
+        txs = entries.select(
+            "file_seq", "ledger_seq", F.explode("txs").alias("tx")
+        )
+        ops = txs.select(
+            "file_seq",
+            "ledger_seq",
+            F.col("tx.hash").alias("hash"),
+            F.col("tx.memo").alias("memo_text"),
+            F.col("tx.fee").alias("fee"),
+            F.col("tx.source").alias("tx_source"),
+            F.posexplode("tx.operations").alias("operation_index", "op"),
+        )
+        kin = (
+            (F.col("op.type") == 1)
+            & (F.col("op.asset.assetCode") == "KIN")
+            & (F.col("op.asset.issuer") == kin_issuer_hex)
+        )
+        return ops.filter(kin | (F.col("op.type") == 0)).select(
+            F.when(F.col("op.type") == 1, "payment")
+            .otherwise("creation")
+            .alias("type"),
+            "file_seq",
+            "ledger_seq",
+            "hash",
+            "operation_index",
+            F.coalesce(
+                F.try_element_at("op.sourceAccount", F.lit(1)), "tx_source"
+            ).alias("source"),
+            F.col("op.destination").alias("destination"),
+            F.coalesce("op.amount", "op.starting_balance").alias("amount"),
+            "memo_text",
+            "fee",
+        )
+
+    return transform
 
 
 def start_ingest(
@@ -91,7 +120,9 @@ def start_ingest(
 ) -> StreamingQuery:
     """File stream -> optional transform -> exactly-once foreachBatch.
 
-    `batch_fn` is typically ExactlyOnceDualSink.write_batch; restart
+    `batch_fn` is typically ExactlyOnceDualSink.write_batch and
+    `transform` ``kin_operations(issuer)``, which yields the `type`
+    column the sink splits on; restart
     with the same checkpoint_dir resumes after the last committed batch
     (§2.7-c: checkpoint offsets + idempotent epoch overwrite = the
     reference's data+lastfile single transaction).

@@ -91,6 +91,120 @@ def test_crash_between_data_and_marker_recovers(spark, tmp_path):
     assert counts[0] == counts[1]  # identical batch, no dup rows
 
 
+def _counting_batch(spark, n=40):
+    """A batch whose `type` column comes from a Python UDF that counts its
+    calls, so the count is the number of upstream evaluations."""
+    from pyspark.sql import functions as F
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def kind(i):
+        calls.add(1)
+        return "payment" if i % 2 == 0 else "creation"
+
+    df = spark.range(n).select(
+        kind("id").alias("type"),
+        F.col("id").cast("string").alias("source"),
+        F.lit("dest").alias("destination"),
+        (F.col("id") * 10.0).alias("amount"),
+    )
+    return df, calls
+
+
+@pytest.fixture
+def persisted(spark, monkeypatch):
+    """Every frame persisted while the test runs."""
+    DataFrame = type(spark.range(0))  # the session's concrete class
+    frames = []
+    real = DataFrame.persist
+
+    def persist(self, *args, **kwargs):
+        frames.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "persist", persist)
+    return frames
+
+
+def _cached_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _assert_nothing_cached(spark, frames, rdds_before) -> None:
+    """None of `frames` is in the session's CacheManager and no cached
+    RDD was added. The test session also holds session-lifetime memos,
+    so the CacheManager is checked per frame, not for emptiness."""
+    from pyspark import StorageLevel
+
+    assert all(f.storageLevel == StorageLevel.NONE for f in frames)
+    assert _cached_rdds(spark) == rdds_before
+
+
+def test_write_batch_evaluates_the_batch_once(spark, tmp_path, persisted):
+    sink = ExactlyOnceDualSink(str(tmp_path / "out"))
+    os.makedirs(sink.base_dir, exist_ok=True)
+    rdds = _cached_rdds(spark)
+    batch, calls = _counting_batch(spark)
+    sink.write_batch(batch, 0)
+    assert calls.value == 40  # one evaluation per row, not one per pass
+    assert spark.read.parquet(sink.payments_dir).count() == 20
+    assert spark.read.parquet(sink.creations_dir).count() == 20
+    assert len(persisted) == 1
+    _assert_nothing_cached(spark, persisted, rdds)
+
+
+def test_failed_write_leaves_marker_and_releases_the_cache(
+    spark, tmp_path, persisted
+):
+    sink = ExactlyOnceDualSink(str(tmp_path / "out"))
+    os.makedirs(sink.base_dir, exist_ok=True)
+    sink.write_batch(_batch(spark), 0)
+    rdds = _cached_rdds(spark)
+    real_write = sink._write_rows
+
+    def failing_write(rows, out_dir):
+        if out_dir == sink.creations_dir:
+            raise OSError("disk gone")
+        real_write(rows, out_dir)
+
+    sink._write_rows = failing_write
+    with pytest.raises(OSError):
+        sink.write_batch(_batch(spark), 1)
+    assert sink.last_committed() == 0  # marker untouched
+    assert len(persisted) == 2
+    _assert_nothing_cached(spark, persisted, rdds)
+
+
+def test_replayed_epoch_persists_nothing(spark, tmp_path, persisted):
+    sink = ExactlyOnceDualSink(str(tmp_path / "out"))
+    os.makedirs(sink.base_dir, exist_ok=True)
+    sink.write_batch(_batch(spark), 0)
+    del persisted[:]
+    batch, calls = _counting_batch(spark)
+    sink.write_batch(batch, 0)
+    assert persisted == [] and calls.value == 0
+
+
+def test_write_batch_leaves_session_overwrite_mode_alone(spark, tmp_path):
+    """The dynamic overwrite is a write option: with the session in
+    static mode, a later epoch still keeps the earlier epochs'
+    partitions, and the session conf reads what it read before."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        sink = ExactlyOnceDualSink(str(tmp_path / "out"))
+        os.makedirs(sink.base_dir, exist_ok=True)
+        sink.write_batch(_batch(spark), 0)
+        sink.write_batch(_batch(spark), 1)
+        assert spark.conf.get(key) == "STATIC"
+        epochs = spark.read.parquet(sink.payments_dir).select("epoch_id")
+        assert {r[0] for r in epochs.distinct().collect()} == {0, 1}
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_nullability_enforcement(spark):
     from pyspark.sql import functions as F
 
@@ -228,6 +342,23 @@ def test_jdbc_dual_sink_roundtrip_embedded_derby(spark, tmp_path):
     assert (
         (rows["epoch_id"] == 1) & (rows["source"] == "s1")
     ).sum() == 1
+
+
+def test_jdbc_dual_sink_evaluates_the_batch_once(spark, tmp_path, persisted):
+    from history_collector_spark.sinks.jdbc import JdbcDualSink
+
+    url = f"jdbc:derby:{tmp_path}/db;create=true"
+    props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
+    sink = JdbcDualSink(url, properties=props)
+    sink.ensure_tables(spark)
+    rdds = _cached_rdds(spark)
+    batch, calls = _counting_batch(spark)
+    sink.write_batch(batch, 0)
+    assert calls.value == 40
+    assert spark.read.jdbc(url, "payments", properties=props).count() == 20
+    assert spark.read.jdbc(url, "creations", properties=props).count() == 20
+    assert sink.last_committed(spark) == 0
+    _assert_nothing_cached(spark, persisted, rdds)
 
 
 # -- Storage bootstrap (S10) -------------------------------------------------
